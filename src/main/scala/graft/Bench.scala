@@ -53,7 +53,10 @@ object Bench {
     "q189_dsir_weights", "q190_semantic_dedup", "q195_prefix_filter_join",
     "q49_ivf_ann", "q32_minhash_neardup", "q156_knn_graph",
     "q215_lsh_recall_eval", "q76_dedup_clusters", "q182_release_pipeline",
-    "q232_tokenizer_apply", "q234_bitmap_cube")
+    "q232_tokenizer_apply", "q234_bitmap_cube",
+    // the ETL marts' keyed dimensions: between them these three build
+    // all eight (q42 reads only dimensions q26 and q43 also read)
+    "q26_etl_medical_formula", "q41_etl_facturacion", "q43_etl_retiro")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

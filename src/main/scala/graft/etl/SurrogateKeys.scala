@@ -35,7 +35,7 @@ object SurrogateKeys {
     val named = orderCols.map(_.toString).toSet
     val tieBreakers = df.columns.filterNot(named.contains).map(col)
     val order = orderCols ++ tieBreakers
-    val reserved = Seq("_pid", "_local", "_offset")
+    val reserved = Seq("_pid", "_local", "_offset", "_rank")
     require(!df.columns.exists(reserved.contains),
       s"assign reserves internal column names ${reserved.mkString(", ")}")
 
@@ -51,15 +51,19 @@ object SurrogateKeys {
       .groupBy(col("a._pid").as("_pid"))
       .agg(coalesce(sum(col("b._cnt")), lit(0L)).as("_offset"))
     val local = Window.partitionBy(col("_pid")).orderBy(order: _*)
-    val rank = col("_offset") + row_number().over(local)
+    // bind the rank to a column before the overflow guard reads it: a
+    // window Column repeated inside when/otherwise is extracted once per
+    // occurrence, so the window would evaluate row_number() twice
+    val rank = col("_rank")
     sorted
       .join(broadcast(offsets), Seq("_pid"))
+      .withColumn("_rank", col("_offset") + row_number().over(local))
       .withColumn(idCol,
         when(rank <= Int.MaxValue.toLong, rank.cast("int"))
           .otherwise(raise_error(concat(
             lit(s"surrogate id overflow in $idCol; use assignHashed: "),
             rank.cast("string"))).cast("int")))
-      .drop("_pid", "_offset")
+      .drop("_pid", "_offset", "_rank")
   }
 
   /** Scale path: a collision-free 64-bit key from the natural key,

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Persisted stage boundaries: the production form of an in-plan
   * `.cache()` cut-point. A multi-consumer intermediate (a
@@ -37,12 +40,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * AFTER a successful publish — a concurrent session still scanning
   * an old fingerprint keeps its files until the new boundary exists,
   * and a failed rename never destroys the only good boundary.
+  *
+  * Schema record: the build writes the schema its published files read
+  * back with (`_graft_schema.json`, next to the part files; the leading
+  * underscore keeps it out of Spark's file listing) into the tmp dir
+  * BEFORE the rename, so every published boundary carries it. A hit
+  * reads the boundary with that schema instead of inferring one from
+  * the parquet footers — inference runs a Spark job per read, which
+  * made a hit cost ~0.1 s on a small boundary; a hit now runs no job
+  * at all. The schema travels with the files it describes, so it
+  * cannot go stale against them. A boundary published before the
+  * record existed falls back to inference.
   */
 object StageBoundary {
 
+  private val SchemaFile = "_graft_schema.json"
+
   /** Read the boundary for (query, dir) if one exists for the CURRENT
     * input fingerprint; otherwise build, persist atomically, and read
-    * back. `build` is by-name — never evaluated on a fingerprint hit.
+    * back. `build` is by-name — never evaluated on a fingerprint hit,
+    * and a hit runs no Spark job (the read uses the recorded schema).
     */
   def apply(spark: SparkSession, query: String, dir: String)
            (build: => DataFrame): DataFrame = {
@@ -60,6 +77,10 @@ object StageBoundary {
       if (!fs.exists(new Path(tmp, "_SUCCESS")))
         throw new IllegalStateException(
           s"stage boundary write left no _SUCCESS marker: $tmp")
+      // the one schema inference this boundary ever needs: recorded
+      // with the files, so the rename publishes both together
+      val schema = spark.read.parquet(tmp.toString).schema
+      writeSchema(fs, tmp, schema)
       if (!fs.rename(tmp, dest)) {
         // lost a race to a concurrent builder — its boundary is ours
         // too, once its _SUCCESS appears (rename-then-marker is atomic
@@ -81,7 +102,23 @@ object StageBoundary {
       // leak disk until the data changes).
       cleanup(fs, root, keep = dest.getName)
     }
-    spark.read.parquet(dest.toString)
+    spark.read.schema(schemaOf(spark, fs, dest)).parquet(dest.toString)
+  }
+
+  private def writeSchema(fs: FileSystem, dir: Path, schema: StructType): Unit = {
+    val out = fs.create(new Path(dir, SchemaFile), true)
+    try out.write(schema.json.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Schema of the published boundary `dest`: read from its record,
+    * else (a boundary published without one) inferred. */
+  private def schemaOf(spark: SparkSession, fs: FileSystem, dest: Path): StructType = {
+    val record = new Path(dest, SchemaFile)
+    if (fs.exists(record)) {
+      val in = fs.open(record)
+      val json = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      DataType.fromJson(json).asInstanceOf[StructType]
+    } else spark.read.parquet(dest.toString).schema
   }
 
   /** Grace window before a `__tmp_` dir is presumed crashed. A live
@@ -127,8 +164,12 @@ object StageBoundary {
             (try now - maxMtime(fs, st.getPath) > tmpGraceMs
              catch { case _: java.io.FileNotFoundException => false })
           else n.startsWith("fp_") && n != keep
+        // best-effort: this runs after our boundary is published, so a
+        // failed sweep (a dir another session is deleting or still
+        // holds open) only delays reclaiming disk until the next
+        // publish — it must not fail a read whose data is already live
         if (doomed)
-          try fs.delete(st.getPath, true) catch { case _: Exception => }
+          try fs.delete(st.getPath, true) catch { case _: java.io.IOException => }
       }
     }
 

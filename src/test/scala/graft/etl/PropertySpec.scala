@@ -71,6 +71,16 @@ class PropertySpec extends SparkSpec {
     assert(sortedKeys.map(one) == (1 to sortedKeys.size))
   }
 
+  test("surrogate keys evaluate the rank window once") {
+    import spark.implicits._
+    val plan = SurrogateKeys.assign(Seq("b", "a").toDF("k"), "id", col("k"))
+      .queryExecution.optimizedPlan
+    val windows = plan.flatMap(_.expressions.flatMap(_.collect {
+      case w: org.apache.spark.sql.catalyst.expressions.WindowExpression => w
+    }))
+    assert(windows.size == 1, s"rank window evaluated ${windows.size} times:\n$plan")
+  }
+
   test("calendar fecha_id equals the dense rank of the date") {
     val dim = Calendar.withFechaId(
       Calendar.dimFecha(spark, "1992-01-01", "1992-03-01"), "1992-01-01")

@@ -14,8 +14,12 @@ class ShardWriterSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory("graft_q78_spec").toString
 
   private def withShardDir[A](f: => A): A = {
+    val prev = spark.conf.getOption("graft.shards.dir")
     spark.conf.set("graft.shards.dir", shardRoot)
-    try f finally spark.conf.unset("graft.shards.dir")
+    try f finally prev match {
+      case Some(p) => spark.conf.set("graft.shards.dir", p)
+      case None => spark.conf.unset("graft.shards.dir")
+    }
   }
 
   test("q78 manifest accounts for every packed window and shard dirs exist") {

@@ -1,6 +1,11 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
+import graft.queries.EtlParity
+import graft.sources.ShardPaths
 
 /** Locks the plan properties that make the engine scale — the ones a
   * 100x data growth punishes if they regress. Plans are inspected with
@@ -69,6 +74,34 @@ class PlanRegressionSpec extends SparkSpec {
     assert(p.contains("q32pairs_"), p)
     assert(!p.contains("Generate"), // no band explode in the steady plan
       s"steady-state q32 must not recompute the band join:\n$p")
+  }
+
+  test("the ETL marts share one persisted boundary per keyed dimension") {
+    // a dedicated session on a fresh root, so the first run really builds
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => scala.util.Try(s.conf.set(k, v)) }
+    s.conf.set("graft.shards.dir",
+      java.nio.file.Files.createTempDirectory("graft_etl_dims").toString)
+    def localPath(p: String) = new Path(p).toUri.getPath
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    def dimFiles(df: DataFrame, dim: String): Set[String] = {
+      val root = localPath(ShardPaths.resolve(s, dim, dir))
+      df.inputFiles.map(localPath).filter(_.startsWith(root + "/")).toSet
+    }
+
+    val builtRows = rows(EtlParity.q43EtlRetiro(s, dir))
+    val q43 = EtlParity.q43EtlRetiro(s, dir)
+    val q41 = EtlParity.q41EtlFacturacion(s, dir)
+    for (dim <- Seq("etl_dim_cotizante", "etl_dim_centro_medico")) {
+      assert(dimFiles(q43, dim).nonEmpty, s"q43 does not read $dim")
+      assert(dimFiles(q41, dim) == dimFiles(q43, dim),
+        s"q41 and q43 read different $dim files")
+      val dirs = dimFiles(q43, dim).map(f => new Path(f).getParent.getName)
+      assert(dirs.size == 1 && dirs.head.startsWith("fp_"),
+        s"expected one $dim boundary dir: $dirs")
+    }
+    assert(builtRows.nonEmpty)
+    assert(rows(q43) == builtRows, "q43 on the hit path differs from its build path")
   }
 
   test("aggregation queries combine map-side (partial + final hash aggregate)") {

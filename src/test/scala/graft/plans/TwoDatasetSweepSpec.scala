@@ -71,7 +71,8 @@ class TwoDatasetSweepSpec extends SparkSpec {
     val untaggedAllowed = Set(
       "StageBoundary.scala", // the primitive's own definition
       "ShardPaths.scala",    // the primitive's own definition
-      "IvfAnn.scala")        // s"ivf${k}..." tags; represented by q49 below
+      "IvfAnn.scala",        // s"ivf${k}..." tags; represented by q49 below
+      "EtlParity.scala")     // "etl_dim_*" tags; q26/q41/q43 below
     for ((name, text) <- sources) {
       val all = anyCallRe.findAllIn(text).size
       val tagged = tagRe.findAllMatchIn(text).size
@@ -119,8 +120,10 @@ class TwoDatasetSweepSpec extends SparkSpec {
         exempt += n
       } else toRun += n
     }
-    // metastore representatives (1b) and the IvfAnn helper family (1a)
-    toRun ++= Seq(242, 129, 49)
+    // metastore representatives (1b) and the IvfAnn and EtlParity
+    // helper families (1a); q26, q41 and q43 between them build every
+    // etl_dim_* boundary
+    toRun ++= Seq(242, 129, 49, 26, 41, 43)
 
     // ---- 2. A-then-B-then-A on a fresh shards root, one JVM.
     // A DEDICATED session (never the shared suite session): the sweep

@@ -1,8 +1,12 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 import graft.SparkSpec
 
@@ -13,7 +17,8 @@ import graft.SparkSpec
   * files (rewrite, add) changes the fingerprint and forces a rebuild,
   * so a stale boundary can never answer for fresh data; (3) superseded
   * fingerprints are garbage-collected, bounding disk to one boundary
-  * per (query, dataset).
+  * per (query, dataset); (4) a hit runs no Spark job, and reads back
+  * exactly what schema inference over the published files would.
   */
 class StageBoundarySpec extends SparkSpec {
 
@@ -22,6 +27,81 @@ class StageBoundarySpec extends SparkSpec {
     import spark.implicits._
     rows.toDF("v").coalesce(1).write.mode("overwrite").parquet(s"$d/t")
     d
+  }
+
+  /** Spark jobs started by `body` on this thread. Counted by a local
+    * property tag, so jobs of anything else running on the context do
+    * not count. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.tag") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try {
+      val out = body
+      ListenerBridge.drain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("a hit runs no Spark job and reads back the inferred schema and rows") {
+    val dir = freshInput(Seq(1L, 2L, 3L))
+    val shards = Files.createTempDirectory("graft_sb_out").toString
+    spark.conf.set("graft.shards.dir", shards)
+    // a non-nullable literal and a nullable expression: the schema a
+    // hit reads with must carry parquet's read-back nullability
+    def boundary(s: SparkSession) = StageBoundary(s, "sbspec5", dir)(
+      s.read.parquet(s"$dir/t").select(col("v"), lit("x").as("tag"),
+        when(col("v") > 1, col("v") * 2).as("w")))
+    boundary(spark)
+    val (hit, jobs) = jobsDuring(boundary(spark))
+    assert(jobs == 0, s"a boundary hit ran $jobs Spark job(s)")
+    val dest = hit.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+      .distinct.toSeq
+    assert(dest.size == 1, s"hit read more than one boundary dir: $dest")
+    val inferred = spark.read.parquet(dest.head)
+    assert(hit.schema == inferred.schema)
+    // the build declared `tag` non-nullable; parquet reads it back
+    // nullable, and the recorded schema must say what inference says
+    assert(hit.schema("tag").nullable)
+    assert(rows(hit) == rows(inferred))
+    assert(rows(hit) == Seq("[1,x,null]", "[2,x,4]", "[3,x,6]"))
+
+    // a fresh session reads the same on-disk schema record: still no
+    // job, still the inferred schema
+    val fresh = spark.newSession()
+    fresh.conf.set("graft.shards.dir", shards)
+    val (again, freshJobs) = jobsDuring(boundary(fresh))
+    assert(freshJobs == 0, s"a hit from a fresh session ran $freshJobs Spark job(s)")
+    assert(again.schema == inferred.schema)
+    assert(rows(again) == rows(inferred))
+  }
+
+  test("a boundary published without a schema record still reads back") {
+    val dir = freshInput(Seq(4L, 5L))
+    spark.conf.set("graft.shards.dir",
+      Files.createTempDirectory("graft_sb_out").toString)
+    def boundary() = StageBoundary(spark, "sbspec6", dir)(
+      spark.read.parquet(s"$dir/t").withColumn("w", col("v") + 1))
+    val built = rows(boundary())
+    val root = new org.apache.hadoop.fs.Path(
+      ShardPaths.resolve(spark, "sbspec6", dir))
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fp = fs.listStatus(root).map(_.getPath).find(_.getName.startsWith("fp_")).get
+    assert(fs.delete(new org.apache.hadoop.fs.Path(fp, "_graft_schema.json"), false))
+    assert(rows(boundary()) == built)
   }
 
   test("build runs once per dataset; unchanged input reuses the boundary") {
